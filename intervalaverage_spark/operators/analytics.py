@@ -8,12 +8,9 @@ no UDFs; the only non-codegen node is the percentile buffer (see
 :func:`windowed_percentiles` for the exact/approx trade-off).
 
 Skew: a window partitioned only by the group key puts an entire hot key
-in one task. :func:`rate` takes ``bucket_width`` — the same time-slicing
-skew path as ``operators/asof.py`` (bucket the window by
-``(key, floor(t/width))``, resolve the cross-bucket boundary with a
-1-row-per-bucket carry) — so a hot key spreads across its time buckets.
-Equality with the flat path is property-tested
-(tests/test_property_hypothesis.py).
+in one task. :func:`rate` and :func:`rolling_decomposable` take
+``bucket_width`` — the time-sliced carry of plans/timeslice.py — so a hot
+key spreads across its time buckets.
 """
 
 from __future__ import annotations
@@ -24,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.plans.timeslice import timeslice
 from intervalaverage_spark.validation import IntervalDataError, IntervalSchemaError
 
 _AGGS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
@@ -84,13 +82,10 @@ def rate(
     (one bounded aggregate, default off — the reference's skippable
     eager-validation split, SURVEY §4 #7).
 
-    ``bucket_width`` (the skew path): partition the window by
-    ``(key, floor(t/width))`` instead of key alone, so a hot key spreads
-    across its time buckets. The predecessor of each bucket's first row
-    is resolved by a carry table of ONE row per (key, bucket) — the last
-    point of each bucket, scanned with a window over buckets — joined
-    back on (key, bucket). Two cheap exchanges + one equi join, all
-    spread; identical results to the flat path (property-tested)."""
+    ``bucket_width`` (the skew path, plans/timeslice.py): the window
+    partitions by ``(key, floor(t/width))``; the predecessor of each
+    bucket's first row is the carry — the last point of the nearest
+    earlier bucket. Identical results to the flat path (property-tested)."""
     if counter_reset not in ("none", "zero"):
         raise IntervalSchemaError(
             f"counter_reset must be none/zero, got {counter_reset!r}")
@@ -101,33 +96,16 @@ def rate(
         check_unique_ts(df, ts_col, group_vars)
     t = F.col(ts_col).cast("long")
     v = F.col(value_col).cast("double")
-    orig_cols = df.columns
-
-    if bucket_width is None:
-        w = Window.partitionBy(*group_vars).orderBy(t)
-        prev = F.lag(F.struct(t.alias("t"), v.alias("v"))).over(w)
-        src = df
-    else:
-        if bucket_width <= 0:
-            raise IntervalSchemaError(
-                f"bucket_width must be positive, got {bucket_width}")
-        _no_clash(df, "__rbk", "__rcarry")
-        src = df.withColumn("__rbk", fdiv(t, bucket_width))
-        wb = Window.partitionBy(*group_vars, "__rbk").orderBy(t)
-        inb = F.lag(F.struct(t.alias("t"), v.alias("v"))).over(wb)
-        # carry: last point of each (key, bucket); the predecessor of a
-        # bucket's first row is the previous PRESENT bucket's last point
-        # (every bucket key in the carry table holds >=1 row, so lag(1)
-        # over buckets is exactly "last point in any earlier bucket").
-        b = src.groupBy(*group_vars, "__rbk").agg(
-            F.max_by(F.struct(t.alias("t"), v.alias("v")), t).alias("__blast")
-        )
-        wc = Window.partitionBy(*group_vars).orderBy("__rbk")
-        carry = b.select(
-            *group_vars, "__rbk", F.lag("__blast").over(wc).alias("__rcarry")
-        )
-        src = src.join(carry, on=[*group_vars, "__rbk"], how="left")
-        prev = F.when(inb.isNull(), F.col("__rcarry")).otherwise(inb)
+    point = F.struct(t.alias("t"), v.alias("v"))
+    src, part = timeslice(
+        df, group_vars, t, bucket_width,
+        summary=[F.max_by(point, t).alias("__blast")],
+        combine=lambda earlier, _later: [
+            F.last("__blast", ignorenulls=True).over(earlier).alias("__rcarry")],
+    )
+    prev = F.lag(point).over(Window.partitionBy(*part).orderBy(t))
+    if bucket_width is not None:
+        prev = F.when(prev.isNull(), F.col("__rcarry")).otherwise(prev)
 
     pt, pv = prev.getField("t"), prev.getField("v")
     dv = (
@@ -135,7 +113,7 @@ def rate(
         if counter_reset == "zero" else v - pv
     )
     return src.select(
-        *orig_cols, F.when(t > pt, dv / (t - pt)).alias(out_col)
+        *df.columns, F.when(t > pt, dv / (t - pt)).alias(out_col)
     )
 
 
@@ -207,9 +185,9 @@ def rolling_decomposable(
     1. collapse to one row per (key, t): ``s_t = Σv, c_t = count(v)`` —
        a plain shuffled aggregate (also makes duplicate timestamps share
        one frame result, exactly the RANGE-frame contract);
-    2. running prefix per key — computed per (key, time-bucket) with a
-       1-row-per-bucket offset table when ``bucket_width`` is set (the
-       locf carry construction with SUM instead of LAST);
+    2. running prefix per key — with ``bucket_width``, per (key,
+       time-bucket) plus the sum of all earlier buckets as carry
+       (plans/timeslice.py);
     3. the ``prefix`` just before the frame start is an as-of lookup of
        the prefix table against itself at ``t − w − 1`` —
        :func:`~intervalaverage_spark.operators.asof.asof_join`, which has
@@ -252,7 +230,7 @@ def rolling_decomposable(
     if assume_unique_ts:
         if validate:
             check_unique_ts(df, ts_col, group_vars)
-        _no_clash(df, "__s", "__c", "__q", "__bk", "__bs", "__bc", "__os", "__oc")
+        _no_clash(df, "__s", "__c", "__q")
         # 1 row per (key, t) promised: the input rows ARE the per-t points,
         # so skip both the collapse aggregate and the final join-back.
         pts = df.select(
@@ -266,49 +244,27 @@ def rolling_decomposable(
         ).agg(F.sum("__v").alias("__s"), F.count("__v").alias("__c"))
     keep = [c for c in pts.columns if c not in ("__s", "__c")]
 
-    if bucket_width is None:
-        wcum = (
-            Window.partitionBy(*group_vars)
-            .orderBy("__rd_t")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        pref = pts.select(
-            *keep,
-            F.sum("__s").over(wcum).alias("__rd_cs"),
-            F.sum("__c").over(wcum).alias("__rd_cc"),
-        )
-    else:
-        if bucket_width <= 0:
-            raise IntervalSchemaError(
-                f"bucket_width must be positive, got {bucket_width}")
-        bk = fdiv(F.col("__rd_t"), bucket_width)
-        p2 = pts.withColumn("__bk", bk)
-        b = p2.groupBy(*group_vars, "__bk").agg(
-            F.sum("__s").alias("__bs"), F.sum("__c").alias("__bc"))
-        woff = (
-            Window.partitionBy(*group_vars)
-            .orderBy("__bk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        off = b.select(
-            *group_vars, "__bk",
-            F.coalesce(F.sum("__bs").over(woff), F.lit(0.0)).alias("__os"),
-            F.coalesce(F.sum("__bc").over(woff), F.lit(0).cast("long")).alias("__oc"),
-        )
-        wcb = (
-            Window.partitionBy(*group_vars, "__bk")
-            .orderBy("__rd_t")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+    src, part = timeslice(
+        pts, group_vars, F.col("__rd_t"), bucket_width,
+        summary=[F.sum("__s").alias("__bs"), F.sum("__c").alias("__bc")],
+        combine=lambda earlier, _later: [
+            F.coalesce(F.sum("__bs").over(earlier), F.lit(0.0)).alias("__os"),
+            F.coalesce(F.sum("__bc").over(earlier), F.lit(0).cast("long")).alias("__oc"),
+        ],
+    )
+    wcum = (
+        Window.partitionBy(*part)
+        .orderBy("__rd_t")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cs, cc = F.sum("__s").over(wcum), F.sum("__c").over(wcum)
+    if bucket_width is not None:
         # coalesce BOTH terms: a bucket prefix of only-NULL __s must not
         # wipe out the carried offset (NULL-frame semantics are restored
         # downstream by the fc > 0 guard, so 0 is safe here)
-        pref = p2.join(off, on=[*group_vars, "__bk"], how="left").select(
-            *keep,
-            (F.col("__os") + F.coalesce(F.sum("__s").over(wcb), F.lit(0.0)))
-            .alias("__rd_cs"),
-            (F.col("__oc") + F.sum("__c").over(wcb)).alias("__rd_cc"),
-        )
+        cs = F.col("__os") + F.coalesce(cs, F.lit(0.0))
+        cc = F.col("__oc") + cc
+    pref = src.select(*keep, cs.alias("__rd_cs"), cc.alias("__rd_cc"))
 
     from intervalaverage_spark.operators.asof import asof_join
 

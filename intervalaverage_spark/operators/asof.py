@@ -16,15 +16,13 @@ Spark-first design — **zero join in the default path**:
   no per-key binary search. (A join-based as-of needs an equi+range
   non-equi join and a per-pair argmax — strictly more shuffles.)
 
-* ``bucket_width`` (the skew path): a window partitioned only by key puts
-  an entire hot key in one task. Bucketing partitions the window by
-  ``(key, floor(t/width))`` so a hot key spreads across its time buckets;
-  cross-bucket carry (a left row whose bucket holds no earlier right row)
-  is resolved by the SAME union-window trick run at bucket granularity —
-  per (key, bucket) the right side collapses to its last payload first,
-  so the carry scan touches ~n_buckets rows per key, not n_rows. Two
-  exchanges + one equi join on (key, bucket) — all spread. Equality with
-  the flat path is property-tested (tests/test_pipeline_ops.py).
+* ``bucket_width`` (the skew path): the same window partitioned by
+  ``(key, floor(t/width))`` through the time-sliced carry
+  (plans/timeslice.py). The summary is the last right payload per
+  (key, bucket) — one ``max_by`` over the tagged union, so buckets that
+  hold only left rows get a row too — and the carry is the nearest
+  earlier bucket's. Equality with the flat path is property-tested
+  (tests/test_property_hypothesis.py, tests/test_asof_fill.py).
 
 100 TB: both paths shuffle each row exactly once on a composite key the
 data model already spreads (url-hash × time); no driver collect, no
@@ -35,10 +33,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.plans.timeslice import timeslice
 from intervalaverage_spark.validation import IntervalSchemaError
 
 
@@ -126,61 +124,26 @@ def asof_join(
     if direction == "forward":
         u = u.withColumn("__t", -F.col("__t"))
 
-    if bucket_width is None:
+    def in_bucket(part: list[str]) -> list[Column]:
         w = (
-            Window.partitionBy(*on)
+            Window.partitionBy(*part)
             .orderBy("__t", "__side")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        matched = u.select(
-            "*", F.last("__rpay", ignorenulls=True).over(w).alias("__m")
-        ).filter(F.col("__side") == 1)
-    else:
-        bk = fdiv(F.col("__t"), bucket_width)
-        u = u.withColumn("__bk", bk)
-        wb = (
-            Window.partitionBy(*on, "__bk")
-            .orderBy("__t", "__side")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        inb = u.select(
-            "*", F.last("__rpay", ignorenulls=True).over(wb).alias("__inb")
-        ).filter(F.col("__side") == 1)
+        return [F.last("__rpay", ignorenulls=True).over(w).alias("__m")]
 
-        # cross-bucket carry at bucket granularity: right collapses to its
-        # per-(key, bucket) last payload (max mirrored __t — unique per the
-        # input contract), left collapses to its distinct buckets; left bucket
-        # rows sort BEFORE right bucket rows at equal bucket, so the carry
-        # a left row sees is "last right payload in any bucket < mine".
-        rb = (
-            u.filter(F.col("__side") == 0)
-            .groupBy(*on, "__bk")
-            .agg(F.max_by("__rpay", F.col("__t")).alias("__blast"))
-            .select(*on, "__bk", F.lit(1).alias("__bs"), "__blast")
-        )
-        lb = (
-            u.filter(F.col("__side") == 1)
-            .select(*on, "__bk").distinct()
-            .select(*on, "__bk", F.lit(0).alias("__bs"),
-                    F.lit(None).cast(rb.schema["__blast"].dataType.simpleString())
-                    .alias("__blast"))
-        )
-        wc = (
-            Window.partitionBy(*on)
-            .orderBy("__bk", "__bs")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        carry = (
-            lb.unionByName(rb)
-            .select("*", F.last("__blast", ignorenulls=True).over(wc).alias("__carry"))
-            .filter(F.col("__bs") == 0)
-            .select(*on, "__bk", "__carry")
-        )
-        matched = inb.join(carry, on=[*on, "__bk"], how="left").withColumn(
-            "__m", F.coalesce(F.col("__inb"), F.col("__carry"))
-        )
-
+    src, _ = timeslice(
+        u, on, F.col("__t"), bucket_width,
+        summary=[F.max_by("__rpay", F.when(F.col("__side") == 0, F.col("__t")))
+                 .alias("__blast")],
+        combine=lambda earlier, _later: [
+            F.last("__blast", ignorenulls=True).over(earlier).alias("__carry")],
+        within=in_bucket,
+    )
+    matched = src.filter(F.col("__side") == 1)
     m = F.col("__m")
+    if bucket_width is not None:
+        m = F.coalesce(m, F.col("__carry"))
     if tolerance is not None:
         # distance on the (possibly mirrored) axis: __t - __rt >= 0 always
         dist = F.col("__t") - (m.getField("__rt") * (-1 if direction == "forward" else 1))

@@ -17,16 +17,12 @@ the group key, no join, no UDF. At 10^12 rows the window partitions by
 the same (url-hash) key the tier tables are already laid out on, so with
 a bucketed/partitioned layout the exchange disappears entirely.
 
-Skew (``bucket_width``): a window partitioned only by key puts an entire
-hot key in one task. Passing ``bucket_width`` re-partitions the window by
-``(key, floor(order/width))`` — a hot key spreads across its time
-buckets — and resolves cross-bucket fills with a carry table of ONE row
-per (key, bucket): the last (locf) / first (nocb) / both (interpolate)
-non-null observation of each bucket, runs of which are scanned with a
-window over buckets and joined back on (key, bucket). Two cheap
-exchanges + one equi join, all spread; identical results to the flat
-path (property-tested, tests/test_property_hypothesis.py). Same design
-as operators/asof.py's bucket+carry.
+Skew (``bucket_width``): the same windows partitioned by
+``(key, floor(order/width))`` through the time-sliced carry
+(plans/timeslice.py). The summary is the last (locf) / first (nocb) /
+both (interpolate) non-null ``struct(t, v)`` per (key, bucket); the carry
+is the nearest one in an earlier / later bucket. The bucketed path needs
+an integer order domain: fractional order columns raise.
 """
 
 from __future__ import annotations
@@ -36,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.plans.timeslice import timeslice
 from intervalaverage_spark.validation import IntervalSchemaError
 
 
@@ -52,7 +48,7 @@ def _order_distance_col(df: DataFrame, order_col: str,
     ``unix_date`` (epoch DAYS): Spark 3+/4 forbids a date→numeric cast
     outright (DATATYPE_MISMATCH, round-6 ADVICE), and the day unit is
     what a daily-grid ``limit`` means. The bucketed path always
-    long-izes the order: its carry timestamps are long."""
+    long-izes the order: it is also the bucket and carry time."""
     import pyspark.sql.types as T
 
     dt = df.schema[order_col].dataType
@@ -64,86 +60,100 @@ def _order_distance_col(df: DataFrame, order_col: str,
     return F.col(order_col)
 
 
-def _check(
+def _carry(v: str, forward: bool) -> str:
+    return f"__c{'f' if forward else 'b'}_{v}"
+
+
+def _sliced(
     df: DataFrame,
     order_col: str,
     value_cols: Sequence[str],
     group_vars: Sequence[str],
     out_suffix: str,
     bucket_width: int | None,
-):
+    directions: Sequence[bool],
+) -> tuple[DataFrame, list[str]]:
+    """Validate, then :func:`timeslice` with the nearest non-null
+    observation ``struct<t, v>`` of each value column as carry: from the
+    nearest strictly EARLIER bucket, or LATER for ``forward`` in
+    ``directions``."""
+    import pyspark.sql.types as T
+
     for c in (order_col, *value_cols, *group_vars):
         if c not in df.columns:
             raise IntervalSchemaError(f"missing column {c!r}")
     clash = [f"{v}{out_suffix}" for v in value_cols if f"{v}{out_suffix}" in df.columns]
     if clash:
         raise IntervalSchemaError(f"output column(s) {clash} already exist")
-    if bucket_width is not None and bucket_width <= 0:
-        raise IntervalSchemaError(f"bucket_width must be positive, got {bucket_width}")
+    dt = df.schema[order_col].dataType
+    if bucket_width is not None and (
+            isinstance(dt, (T.FloatType, T.DoubleType))
+            or (isinstance(dt, T.DecimalType) and dt.scale > 0)):
+        raise IntervalSchemaError(
+            f"bucket_width needs an integer order domain; {order_col!r} is "
+            f"{dt.simpleString()} (use the flat path or scale to integers)")
+    t = _order_distance_col(df, order_col, bucket_width)
+    # per bucket: the latest (earliest, when carried backward in time)
+    # non-null observation; the carry reads it under the same name
+    summary = [
+        (F.min_by if fwd else F.max_by)(
+            F.struct(t.alias("t"), F.col(v).alias("v")),
+            F.when(F.col(v).isNotNull(), t),
+        ).alias(_carry(v, fwd))
+        for v in value_cols for fwd in directions
+    ]
+    return timeslice(
+        df, group_vars, t, bucket_width, summary=summary,
+        combine=lambda earlier, later: [
+            F.last(_carry(v, fwd), ignorenulls=True)
+            .over(later if fwd else earlier).alias(_carry(v, fwd))
+            for v in value_cols for fwd in directions
+        ],
+    )
 
 
-def _with_carry(
+def _nearest(v: str, ot: Column, order_col: str, part: list[str],
+             bucketed: bool, forward: bool) -> tuple[Column, Column]:
+    """Nearest non-null ``v`` at or before (``forward``: at or after) each
+    row, and its ``ot``: in-bucket window, else the bucket carry."""
+    w = (
+        Window.partitionBy(*part)
+        .orderBy(F.desc(order_col) if forward else order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    val = F.last(v, ignorenulls=True).over(w)
+    at = F.last(F.when(F.col(v).isNotNull(), ot), ignorenulls=True).over(w)
+    if bucketed:
+        c = F.col(_carry(v, forward))
+        val = F.when(at.isNull(), c.getField("v")).otherwise(val)
+        at = F.coalesce(at, c.getField("t"))
+    return val, at
+
+
+def _carry_fill(
     df: DataFrame,
     order_col: str,
     value_cols: Sequence[str],
     group_vars: Sequence[str],
-    bucket_width: int,
-    backward: bool,
+    limit: int | None,
+    out_suffix: str,
+    bucket_width: int | None,
     forward: bool,
 ) -> DataFrame:
-    """Append ``__fbk`` (time bucket) plus, per value column, the
-    cross-bucket carry structs ``__cb_<v>`` (nearest non-null observation
-    in any strictly EARLIER bucket: ``struct<t, v>``) and/or ``__cf_<v>``
-    (strictly LATER bucket). One groupBy to a 1-row-per-(key, bucket)
-    table, one window over buckets on it, one equi join back — every
-    stage keyed by (key, bucket), so the hot key stays spread."""
-    import pyspark.sql.types as T
-
-    # DateType cannot cast to numeric on Spark 3+/4 — epoch days instead,
-    # matching _order_distance_col so carry t and src_t share a domain.
-    if isinstance(df.schema[order_col].dataType, T.DateType):
-        t = F.unix_date(F.col(order_col))
-    else:
-        t = F.col(order_col).cast("long")
-    reserved = ["__fbk"] + [f"__cb_{v}" for v in value_cols] + [f"__cf_{v}" for v in value_cols]
-    clash = [c for c in reserved if c in df.columns]
-    if clash:
-        raise IntervalSchemaError(f"internal column(s) {clash} already exist in input")
-    src = df.withColumn("__fbk", fdiv(t, bucket_width))
-
-    aggs = []
+    """:func:`locf` (``forward=False``) and :func:`nocb` (``forward=True``)."""
+    value_cols = list(value_cols)
+    src, part = _sliced(df, order_col, value_cols, group_vars, out_suffix,
+                        bucket_width, [forward])
+    ot = _order_distance_col(df, order_col, bucket_width)
+    cols: list[Column] = []
     for v in value_cols:
-        nn_t = F.when(F.col(v).isNotNull(), t)
-        pt = F.struct(t.alias("t"), F.col(v).alias("v"))
-        if backward:
-            aggs.append(F.max_by(pt, nn_t).alias(f"__bl_{v}"))
-        if forward:
-            aggs.append(F.min_by(pt, nn_t).alias(f"__bf_{v}"))
-    b = src.groupBy(*group_vars, "__fbk").agg(*aggs)
-
-    carry_cols: list[Column] = [*[F.col(g) for g in group_vars], F.col("__fbk")]
-    if backward:
-        wb = (
-            Window.partitionBy(*group_vars)
-            .orderBy("__fbk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_cols += [
-            F.last(f"__bl_{v}", ignorenulls=True).over(wb).alias(f"__cb_{v}")
-            for v in value_cols
-        ]
-    if forward:
-        wf = (
-            Window.partitionBy(*group_vars)
-            .orderBy(F.desc("__fbk"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_cols += [
-            F.last(f"__bf_{v}", ignorenulls=True).over(wf).alias(f"__cf_{v}")
-            for v in value_cols
-        ]
-    carry = b.select(*carry_cols)
-    return src.join(carry, on=[*group_vars, "__fbk"], how="left")
+        filled, src_t = _nearest(v, ot, order_col, part,
+                                 bucket_width is not None, forward)
+        if limit is not None:
+            dist = src_t - ot if forward else ot - src_t
+            filled = F.when(dist <= F.lit(int(limit)), filled)
+        cols.append(filled.alias(f"{v}{out_suffix}"))
+    return src.select(*df.columns, *cols)
 
 
 def locf(
@@ -160,40 +170,11 @@ def locf(
     many order-units past the observation (NULL again beyond it) — the
     distance is measured in the order column's OWN type for numeric
     order columns (exact for doubles too) and in long epoch units for
-    timestamp/date ones (see :func:`_order_distance_col`); the bucketed
-    path casts to long (its carry timestamps are long), so it requires
-    an integer order domain anyway (``fdiv``). ``bucket_width``:
-    time-sliced skew path (module docstring)."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    _check(df, order_col, value_cols, group_vars, out_suffix, bucket_width)
-    orig_cols = df.columns
-    if bucket_width is None:
-        src, part = df, list(group_vars)
-    else:
-        src = _with_carry(df, order_col, value_cols, group_vars, bucket_width,
-                          backward=True, forward=False)
-        part = [*group_vars, "__fbk"]
-    w = (
-        Window.partitionBy(*part)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # native-type order for numerics, long for timestamp/date (helper)
-    ot = _order_distance_col(df, order_col, bucket_width)
-    cols: list[Column] = []
-    for v in value_cols:
-        filled = F.last(v, ignorenulls=True).over(w)
-        src_t = F.last(
-            F.when(F.col(v).isNotNull(), ot), ignorenulls=True
-        ).over(w)
-        if bucket_width is not None:
-            cb = F.col(f"__cb_{v}")
-            filled = F.when(src_t.isNull(), cb.getField("v")).otherwise(filled)
-            src_t = F.coalesce(src_t, cb.getField("t"))
-        if limit is not None:
-            filled = F.when(ot - src_t <= F.lit(int(limit)), filled)
-        cols.append(filled.alias(f"{v}{out_suffix}"))
-    return src.select(*orig_cols, *cols)
+    timestamp/date ones (see :func:`_order_distance_col`).
+    ``bucket_width``: time-sliced skew path (module docstring); it
+    requires an integer order domain and raises on fractional ones."""
+    return _carry_fill(df, order_col, value_cols, group_vars, limit,
+                       out_suffix, bucket_width, forward=False)
 
 
 def nocb(
@@ -209,36 +190,8 @@ def nocb(
     order axis (same single-exchange plan, descending sort; same
     ``bucket_width`` skew path with the carry scanned from LATER
     buckets)."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    _check(df, order_col, value_cols, group_vars, out_suffix, bucket_width)
-    orig_cols = df.columns
-    if bucket_width is None:
-        src, part = df, list(group_vars)
-    else:
-        src = _with_carry(df, order_col, value_cols, group_vars, bucket_width,
-                          backward=False, forward=True)
-        part = [*group_vars, "__fbk"]
-    w = (
-        Window.partitionBy(*part)
-        .orderBy(F.desc(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # mirror of locf: numeric native / timestamp long (helper)
-    ot = _order_distance_col(df, order_col, bucket_width)
-    cols: list[Column] = []
-    for v in value_cols:
-        filled = F.last(v, ignorenulls=True).over(w)
-        src_t = F.last(
-            F.when(F.col(v).isNotNull(), ot), ignorenulls=True
-        ).over(w)
-        if bucket_width is not None:
-            cf = F.col(f"__cf_{v}")
-            filled = F.when(src_t.isNull(), cf.getField("v")).otherwise(filled)
-            src_t = F.coalesce(src_t, cf.getField("t"))
-        if limit is not None:
-            filled = F.when(src_t - ot <= F.lit(int(limit)), filled)
-        cols.append(filled.alias(f"{v}{out_suffix}"))
-    return src.select(*orig_cols, *cols)
+    return _carry_fill(df, order_col, value_cols, group_vars, limit,
+                       out_suffix, bucket_width, forward=True)
 
 
 def interpolate_linear(
@@ -257,43 +210,20 @@ def interpolate_linear(
     Catalyst plans one exchange and two sorts, still zero joins. With
     ``bucket_width`` the windows re-key by (key, bucket) and BOTH carry
     directions come from one 1-row-per-bucket table (one extra join)."""
-    group_vars, value_cols = list(group_vars), list(value_cols)
-    _check(df, order_col, value_cols, group_vars, out_suffix, bucket_width)
-    orig_cols = df.columns
-    if bucket_width is None:
-        src, part = df, list(group_vars)
-    else:
-        src = _with_carry(df, order_col, value_cols, group_vars, bucket_width,
-                          backward=True, forward=True)
-        part = [*group_vars, "__fbk"]
+    value_cols = list(value_cols)
+    src, part = _sliced(df, order_col, value_cols, group_vars, out_suffix,
+                        bucket_width, [False, True])
     t = F.col(order_col).cast("double")
-    wb = (
-        Window.partitionBy(*part)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy(*part)
-        .orderBy(F.desc(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     cols: list[Column] = []
     for v in value_cols:
-        nn = F.col(v).isNotNull()
-        pv = F.last(v, ignorenulls=True).over(wb)
-        pt = F.last(F.when(nn, t), ignorenulls=True).over(wb)
-        nv = F.last(v, ignorenulls=True).over(wf)
-        nt = F.last(F.when(nn, t), ignorenulls=True).over(wf)
-        if bucket_width is not None:
-            cb, cf = F.col(f"__cb_{v}"), F.col(f"__cf_{v}")
-            pv = F.when(pt.isNull(), cb.getField("v")).otherwise(pv)
-            pt = F.coalesce(pt, cb.getField("t").cast("double"))
-            nv = F.when(nt.isNull(), cf.getField("v")).otherwise(nv)
-            nt = F.coalesce(nt, cf.getField("t").cast("double"))
+        pv, pt = _nearest(v, t, order_col, part,
+                          bucket_width is not None, forward=False)
+        nv, nt = _nearest(v, t, order_col, part,
+                          bucket_width is not None, forward=True)
         interp = pv + (nv - pv) * (t - pt) / (nt - pt)
         cols.append(
-            F.when(nn, F.col(v).cast("double"))
+            F.when(F.col(v).isNotNull(), F.col(v).cast("double"))
             .when(pv.isNotNull() & nv.isNotNull(), interp)
             .alias(f"{v}{out_suffix}")
         )
-    return src.select(*orig_cols, *cols)
+    return src.select(*df.columns, *cols)

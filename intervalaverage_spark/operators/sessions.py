@@ -9,36 +9,31 @@ Plan: one window per key (lag + running sum of session-break flags) and,
 for bounds, one aggregate sharing the SAME (key) partitioning — Catalyst
 plans a single exchange for both. All codegen, no join, no UDF.
 
-Skew (``bucket_width``, round 4): a session is defined by consecutive
-rows, so the window cannot be NAIVELY time-sliced — but cross-bucket
-merging is itself a gaps-and-islands problem at BUCKET granularity:
+Skew (``bucket_width``): a session is defined by consecutive rows, so
+the window cannot be NAIVELY time-sliced — but cross-bucket merging is
+itself a gaps-and-islands problem at BUCKET granularity, resolved by the
+time-sliced carry (plans/timeslice.py):
 
-1. sessionize within each ``(key, floor(t/width))`` bucket (hot key
-   spreads across its time buckets);
-2. per (key, bucket) summarize ``(min_t, max_t, n_sessions)`` — ONE row
-   per bucket;
-3. a bucket's first session continues the previous bucket's last session
-   iff ``min_t − prev_max_t ≤ gap`` (exactly the flat break condition
-   at the boundary row); a window over the tiny bucket table computes
-   that flag plus the running global-id offset
+1. sessionize within each ``(key, floor(t/width))`` bucket (local ids);
+2. summary per (key, bucket): ``(min_t, max_t, n_sessions)``;
+3. combine: a bucket's first session continues the previous bucket's
+   last session iff ``min_t − prev_max_t ≤ gap`` (exactly the flat break
+   condition at the boundary row), and the running global-id offset is
    ``Σ (n_sessions − merged)`` over earlier buckets;
-4. join the offsets back on (key, bucket):
-   ``session_id = offset + local_id − merged``.
+4. after the join back: ``session_id = offset + local_id − merged``.
 
 Identical output to the flat path (hypothesis-tested, including the
-everything-merges ``gap ≥ width`` regime); two cheap exchanges + one
-equi join, every heavy stage keyed by (key, bucket). Same bucket+carry
-design as operators/asof.py / fill.py / analytics.rate.
+everything-merges ``gap ≥ width`` regime).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from intervalaverage_spark.plans.rangejoin import fdiv
+from intervalaverage_spark.plans.timeslice import timeslice
 from intervalaverage_spark.validation import IntervalSchemaError
 
 
@@ -64,64 +59,37 @@ def sessionize(
     if gap < 0:
         raise IntervalSchemaError(f"gap must be >= 0, got {gap}")
     t = F.col(ts_col).cast("long")
+    # flat: the local ids ARE the session ids (same plan, no internal name)
+    lsid = out_col if bucket_width is None else "__lsid"
 
-    if bucket_width is None:
-        w = Window.partitionBy(*group_vars).orderBy(t)
+    def local_ids(part: list[str]) -> list[Column]:
+        w = Window.partitionBy(*part).orderBy(t)
         prev = F.lag(t).over(w)
         brk = F.when(prev.isNull() | ((t - prev) > gap), 1).otherwise(0)
-        run = (
-            Window.partitionBy(*group_vars)
-            .orderBy(t)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.select("*", F.sum(brk).over(run).alias(out_col))
+        run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        return [F.sum(brk).over(run).alias(lsid)]
 
-    if bucket_width <= 0:
-        raise IntervalSchemaError(
-            f"bucket_width must be positive, got {bucket_width}")
-    reserved = ["__sbk", "__lsid", "__soff", "__smrg"]
-    clash = [c for c in reserved if c in df.columns]
-    if clash:
-        raise IntervalSchemaError(f"internal column(s) {clash} already exist in input")
-    orig_cols = df.columns
+    def merge_offset(earlier: WindowSpec, _later: WindowSpec) -> list[Column]:
+        prev_max = F.last("__max_t", ignorenulls=True).over(earlier)
+        merged = F.when(
+            prev_max.isNotNull() & ((F.col("__min_t") - prev_max) <= gap), 1
+        ).otherwise(0)
+        return [
+            merged.alias("__smrg"),
+            F.coalesce(F.sum(F.col("__n_sess") - merged).over(earlier),
+                       F.lit(0)).alias("__soff"),
+        ]
 
-    src = df.withColumn("__sbk", fdiv(t, bucket_width))
-    wb = Window.partitionBy(*group_vars, "__sbk").orderBy(t)
-    prev = F.lag(t).over(wb)
-    brk = F.when(prev.isNull() | ((t - prev) > gap), 1).otherwise(0)
-    runb = (
-        Window.partitionBy(*group_vars, "__sbk")
-        .orderBy(t)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    src, _ = timeslice(
+        df, group_vars, t, bucket_width,
+        summary=[F.min(t).alias("__min_t"), F.max(t).alias("__max_t"),
+                 F.max("__lsid").alias("__n_sess")],
+        combine=merge_offset, within=local_ids,
     )
-    src = src.withColumn("__lsid", F.sum(brk).over(runb))
-
-    b = src.groupBy(*group_vars, "__sbk").agg(
-        F.min(t).alias("__min_t"),
-        F.max(t).alias("__max_t"),
-        F.max("__lsid").alias("__n_sess"),
-    )
-    wk = Window.partitionBy(*group_vars).orderBy("__sbk")
-    prev_max = F.lag("__max_t").over(wk)
-    merged = F.when(
-        prev_max.isNotNull() & ((F.col("__min_t") - prev_max) <= gap), 1
-    ).otherwise(0)
-    b = b.withColumn("__smrg", merged)
-    woff = (
-        Window.partitionBy(*group_vars)
-        .orderBy("__sbk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    b = b.select(
-        *group_vars, "__sbk", "__smrg",
-        F.coalesce(F.sum(F.col("__n_sess") - F.col("__smrg")).over(woff),
-                   F.lit(0)).alias("__soff"),
-    )
-    out = src.join(b, on=[*group_vars, "__sbk"], how="left")
-    return out.select(
-        *orig_cols,
-        (F.col("__soff") + F.col("__lsid") - F.col("__smrg")).alias(out_col),
-    )
+    sid = F.col(lsid)
+    if bucket_width is not None:
+        sid = F.col("__soff") + sid - F.col("__smrg")
+    return src.select(*df.columns, sid.alias(out_col))
 
 
 def session_bounds(

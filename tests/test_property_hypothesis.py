@@ -75,38 +75,49 @@ def test_sessionize_vs_python(spark, ts, gap):
 
 @SET
 @given(
-    lt=st.lists(st.integers(0, 300), min_size=1, max_size=30),
-    rt=st.lists(st.integers(0, 300), min_size=1, max_size=30, unique=True),
+    lt=st.lists(st.tuples(st.integers(1, 2), st.integers(0, 300)),
+                min_size=1, max_size=30),
+    rt=st.lists(st.tuples(st.integers(1, 2), st.integers(0, 300)),
+                min_size=1, max_size=30, unique=True),
     bw=st.one_of(st.none(), st.integers(1, 100)),
+    direction=st.sampled_from(["backward", "forward"]),
 )
-def test_asof_backward_vs_python_bisect(spark, lt, rt, bw):
-    l = spark.createDataFrame(pd.DataFrame({"k": 1, "t": lt}))
-    r = spark.createDataFrame(
-        pd.DataFrame({"k": 1, "t": rt, "rv": [float(t) for t in rt]}))
-    out = asof_join(l, r, ["k"], "t", "t", ["rv"], bucket_width=bw).toPandas()
-    rs = sorted(rt)
+def test_asof_backward_vs_python_bisect(spark, lt, rt, bw, direction):
+    """Both directions, flat and bucketed, against a per-key bisect —
+    two keys, so a carry leaking across keys shows."""
+    l = spark.createDataFrame(pd.DataFrame(lt, columns=["k", "t"]))
+    r = spark.createDataFrame(pd.DataFrame(
+        [(k, t, float(t)) for k, t in rt], columns=["k", "t", "rv"]))
+    out = asof_join(l, r, ["k"], "t", "t", ["rv"], direction=direction,
+                    bucket_width=bw).toPandas()
     want = {}
-    for t in lt:
-        i = bisect.bisect_right(rs, t)
-        want[t] = rs[i - 1] if i else None
+    for k, t in lt:
+        rs = sorted(rt_ for k_, rt_ in rt if k_ == k)
+        if direction == "backward":
+            i = bisect.bisect_right(rs, t)
+            want[k, t] = rs[i - 1] if i else None
+        else:
+            i = bisect.bisect_left(rs, t)
+            want[k, t] = rs[i] if i < len(rs) else None
+    assert len(out) == len(lt)
     for _, row in out.iterrows():
-        m = want[row["t"]]
+        m = want[row["k"], row["t"]]
         got = None if pd.isna(row["t_right"]) else int(row["t_right"])
         assert got == m
         if m is not None:
             assert row["rv_right"] == float(m)
 
 
+# two keys: a flat==bucketed carry that leaked across keys would show
 series = st.lists(
-    st.tuples(st.integers(0, 300), st.one_of(st.none(), st.floats(
-        -100, 100, allow_nan=False))),
-    min_size=1, max_size=40, unique_by=lambda r: r[0],
+    st.tuples(st.integers(1, 2), st.integers(0, 300),
+              st.one_of(st.none(), st.floats(-100, 100, allow_nan=False))),
+    min_size=1, max_size=40, unique_by=lambda r: r[:2],
 )
 
 
 def _fill_frames(spark, pts):
-    pdf = pd.DataFrame({"k": 1, "t": [t for t, _ in pts],
-                        "v": [v for _, v in pts]}).astype({"v": "float64"})
+    pdf = pd.DataFrame(pts, columns=["k", "t", "v"]).astype({"v": "float64"})
     return spark.createDataFrame(pdf)
 
 
@@ -118,9 +129,9 @@ def test_locf_nocb_bucketed_equals_flat(spark, pts, bw, limit):
 
     df = _fill_frames(spark, pts)
     for op in (locf, nocb):
-        flat = op(df, "t", ["v"], ["k"], limit=limit).toPandas().sort_values("t")
+        flat = op(df, "t", ["v"], ["k"], limit=limit).toPandas().sort_values(["k", "t"])
         buck = op(df, "t", ["v"], ["k"], limit=limit,
-                  bucket_width=bw).toPandas().sort_values("t")
+                  bucket_width=bw).toPandas().sort_values(["k", "t"])
         assert flat["v_filled"].fillna(-1e18).tolist() \
             == buck["v_filled"].fillna(-1e18).tolist(), op.__name__
 
@@ -131,9 +142,9 @@ def test_interpolate_bucketed_equals_flat(spark, pts, bw):
     from intervalaverage_spark.operators.fill import interpolate_linear
 
     df = _fill_frames(spark, pts)
-    flat = interpolate_linear(df, "t", ["v"], ["k"]).toPandas().sort_values("t")
+    flat = interpolate_linear(df, "t", ["v"], ["k"]).toPandas().sort_values(["k", "t"])
     buck = interpolate_linear(df, "t", ["v"], ["k"],
-                              bucket_width=bw).toPandas().sort_values("t")
+                              bucket_width=bw).toPandas().sort_values(["k", "t"])
     f = flat["v_filled"].to_numpy()
     b = buck["v_filled"].to_numpy()
     assert ((pd.isna(f) & pd.isna(b)) | np.isclose(f, b, equal_nan=True)).all()
@@ -147,30 +158,30 @@ def test_rate_bucketed_equals_flat(spark, pts, bw, reset):
 
     df = _fill_frames(spark, pts)
     flat = _rate(df, "t", "v", ["k"], counter_reset=reset).toPandas(
-    ).sort_values("t")
+    ).sort_values(["k", "t"])
     buck = _rate(df, "t", "v", ["k"], counter_reset=reset,
-                 bucket_width=bw).toPandas().sort_values("t")
+                 bucket_width=bw).toPandas().sort_values(["k", "t"])
     f, b = flat["rate"].to_numpy(), buck["rate"].to_numpy()
     assert ((pd.isna(f) & pd.isna(b)) | np.isclose(f, b, equal_nan=True)).all()
 
 
 @SET
 @given(
-    ts=st.lists(st.integers(0, 500), min_size=1, max_size=50),
+    ts=st.lists(st.tuples(st.integers(1, 2), st.integers(0, 500)),
+                min_size=1, max_size=50),
     gap=st.integers(0, 30),
     bw=st.integers(1, 120),
 )
 def test_sessionize_bucketed_equals_flat(spark, ts, gap, bw):
     """Time-sliced sessionize (within-bucket islands + bucket-granularity
     merge pass) must assign the IDENTICAL session ids as the flat window —
-    including duplicate timestamps, gap=0, and the everything-merges
-    gap >= bucket_width regime."""
-    pdf = pd.DataFrame({"k": 1, "t": ts})
-    df = spark.createDataFrame(pdf)
+    including duplicate timestamps, gap=0, the everything-merges
+    gap >= bucket_width regime, and two keys (no carry across keys)."""
+    df = spark.createDataFrame(pd.DataFrame(ts, columns=["k", "t"]))
     flat = sessionize(df, "t", gap, ["k"]).toPandas()
     buck = sessionize(df, "t", gap, ["k"], bucket_width=bw).toPandas()
-    assert sorted(zip(flat["t"], flat["session_id"])) \
-        == sorted(zip(buck["t"], buck["session_id"]))
+    assert sorted(zip(flat["k"], flat["t"], flat["session_id"])) \
+        == sorted(zip(buck["k"], buck["t"], buck["session_id"]))
 
 
 @SET
@@ -183,8 +194,8 @@ def test_rolling_minmax_equals_direct_frame(spark, pts, w):
 
     df = _fill_frames(spark, pts)
     want = rolling(df, "t", "v", w, ["k"], aggs=("min", "max")).toPandas(
-    ).sort_values("t")
-    got = rolling_minmax(df, "t", "v", w, ["k"]).toPandas().sort_values("t")
+    ).sort_values(["k", "t"])
+    got = rolling_minmax(df, "t", "v", w, ["k"]).toPandas().sort_values(["k", "t"])
     for c in ("v_roll_min", "v_roll_max"):
         f, b = want[c].to_numpy(), got[c].to_numpy()
         assert ((pd.isna(f) & pd.isna(b)) | np.isclose(f, b, equal_nan=True)).all(), c
