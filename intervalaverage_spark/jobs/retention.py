@@ -4,10 +4,10 @@ The third leg of the north_rule's "rollup + downsample + retention"
 engine. Policies map tier → keep horizon (seconds); enforcement drops
 whole ``d=<day>`` partition directories under ``tier=<t>/`` — a
 driver-side filesystem metadata operation (same Hadoop FS path as
-vanished-bucket cleanup, plans/checkpoint.py:111), NO data read, NO
-rewrite, any store. This is exactly why the engine keeps mergeable STATE
-per tier (operators/tiers.py): 30d-from-1d equals 30d-from-raw, so
-dropping raw/fine partitions after the coarser tier is materialized
+vanished-bucket cleanup, ``plans.checkpoint.delete_partition_dirs``),
+NO data read, NO rewrite, any store. This is exactly why the engine keeps
+mergeable STATE per tier (operators/tiers.py): 30d-from-1d equals
+30d-from-raw, so dropping raw/fine partitions after the coarser tier is materialized
 loses nothing the coarser tier reports.
 
 Two safety rules, both enforced here:

@@ -7,6 +7,20 @@ or programmatically through :func:`run_rollup`. Designed so every stage is
 a shuffle on ``(p, …)`` where ``p = xxhash64(url) % n_buckets`` — the tier
 cascade then never reshuffles across stages (url stays co-located), and a
 bucket is the unit of both skew mitigation and resume.
+
+One run is three actions, whatever the number of tiers:
+
+1. the resume plan — bucket fingerprints full-outer-joined with the
+   manifest, collected once (``checkpoint.resume_plan``);
+2. every tier's state as one lazy union with a ``tier`` column, written
+   once ``partitionBy("tier", "p")`` into ``out_root`` with dynamic
+   partition overwrite; per-tier point counts ride on that write as one
+   ``Observation`` (without ``out_root``: one ``groupBy("tier")`` count);
+3. the new manifest, written from its driver-side Arrow table.
+
+Nothing is cached; the interval table is evaluated by the plan collect and
+by the write. Layout: ``<out_root>/tier=<t>/p=<b>/part-*.parquet`` plus
+``<out_root>/_lineage``.
 """
 
 from __future__ import annotations
@@ -15,8 +29,9 @@ import json
 import os
 import time
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from intervalaverage_spark.operators.tiers import (
@@ -43,8 +58,8 @@ def run_rollup(
     strategy: str = "direct",
 ) -> dict:
     """Returns a metrics report. With ``out_root``, states are written
-    partitioned by bucket with a lineage manifest; a re-run recomputes only
-    buckets whose input fingerprint changed.
+    partitioned by tier and bucket with a lineage manifest; a re-run
+    recomputes only buckets whose input fingerprint changed.
 
     ``strategy``:
       * ``"direct"`` (default) — every tier from the raw interval table.
@@ -57,85 +72,67 @@ def run_rollup(
         (rollup_cascade). Correct and REQUIRED when raw has aged out of
         retention and only a finer tier remains; exactness of
         cascade == direct == interval_average is property-tested."""
-    t_start = time.time()
-    report: dict = {"tiers": {}, "buckets": {"n": n_buckets}}
-
-    x = observation_intervals(pages, unit=unit)
-    x = ckpt.with_bucket(x, "url", n_buckets)
-
-    todo = None  # None → everything
-    vanished: list[int] = []
-    manifest_rows: list[DataFrame] = []
-    if out_root and resume:
-        fps = ckpt.fingerprint_partitions(x).cache()
-        manifest = ckpt.read_manifest(spark, out_root)
-        todo, skipped = ckpt.plan_resume(fps, manifest, tier="input")
-        # buckets whose input disappeared entirely emit no fingerprint row:
-        # clear their stale tier partitions + manifest entries
-        vanished = ckpt.vanished_buckets(fps, manifest, tier="input")
-        if vanished:
-            ckpt.delete_partition_dirs(
-                spark, out_root,
-                [f"tier={t}/p={b}" for t in tiers for b in vanished],
-            )
-        report["buckets"]["todo"] = len(todo)
-        report["buckets"]["skipped"] = len(skipped)
-        report["buckets"]["vanished"] = len(vanished)
-        new_manifest = fps.select(
-            F.lit("input").alias("tier"), "p",
-            F.col("fingerprint").alias("input_fingerprint"),
-            F.col("rows").alias("input_rows"),
-            F.lit(None).cast("long").alias("output_rows"),
-            F.lit(None).cast("long").alias("output_checksum"),
-        )
-        manifest_rows.append(new_manifest)
-        if todo is not None:
-            x = x.filter(F.col("p").isin(todo)) if todo else x.limit(0)
-
     widths = [TIER_WIDTHS[t] for t in tiers]
     for w0, w1 in zip(widths, widths[1:]):
         if w1 % w0:
             raise ValueError(f"tier widths must tile: {w0} → {w1}")
-
     if strategy not in ("direct", "cascade"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    prev_state: DataFrame | None = None
-    total_points = 0
-    for tier, width in zip(tiers, widths):
-        t0 = time.time()
-        if prev_state is None or strategy == "direct":
-            state = rollup_from_raw(x, width, VALUE_VARS, [*GROUP_VARS, "p"])
-        else:
-            state = rollup_cascade(prev_state, prev_width, width, VALUE_VARS, [*GROUP_VARS, "p"])
-        state = state.persist()
-        n = state.count()
-        total_points += n
-        report["tiers"][tier] = {"points": n, "seconds": round(time.time() - t0, 3)}
-        if out_root:
-            path = os.path.join(out_root, f"tier={tier}")
-            ckpt.write_partitioned(state, path, ("p",))
-        if prev_state is not None:
-            prev_state.unpersist()
-        prev_state, prev_width = state, width
+    t_start = time.time()
+    report: dict = {"tiers": {}, "buckets": {"n": n_buckets}}
 
-    if out_root and manifest_rows:
-        merged = manifest_rows[0]
-        old = ckpt.read_manifest(spark, out_root)
-        keep_old = old.join(
-            merged.select(F.col("tier").alias("t2"), F.col("p").alias("p2")),
-            (old["tier"] == F.col("t2")) & (old["p"] == F.col("p2")),
-            "left_anti",
+    x = ckpt.with_bucket(observation_intervals(pages, unit=unit), "url", n_buckets)
+    plan = None
+    if out_root and resume:
+        plan = ckpt.resume_plan(
+            ckpt.fingerprint_partitions(x), ckpt.read_manifest(spark, out_root), tier="input")
+        # the write below never reaches a vanished bucket's partitions
+        if plan.vanished:
+            ckpt.delete_partition_dirs(
+                spark, out_root,
+                [f"tier={t}/p={b}" for t in tiers for b in plan.vanished],
+            )
+        report["buckets"].update(
+            todo=len(plan.todo), skipped=len(plan.skipped), vanished=len(plan.vanished))
+        x = x.filter(F.col("p").isin(plan.todo))
+
+    states = _tier_states(x, tiers, widths, strategy)
+    if plan is not None and not plan.todo:
+        counts = {}  # every bucket skipped: nothing to write
+    elif out_root:
+        obs = Observation()
+        ckpt.write_partitioned(
+            states.observe(obs, *[F.count_if(F.col("tier") == t).alias(t) for t in tiers]),
+            out_root, ("tier", "p"),
         )
-        if vanished:
-            keep_old = keep_old.filter(~F.col("p").isin([int(b) for b in vanished]))
-        ckpt.write_manifest(keep_old.unionByName(merged), out_root)
+        counts = obs.get
+    else:
+        counts = {r["tier"]: r["count"] for r in states.groupBy("tier").count().collect()}
+    if plan is not None:
+        ckpt.write_manifest_arrow(spark, plan.manifest, out_root)
 
-    if prev_state is not None:
-        prev_state.unpersist()
-    report["total_points"] = total_points
+    report["tiers"] = {t: {"points": counts.get(t, 0)} for t in tiers}
+    report["total_points"] = sum(v["points"] for v in report["tiers"].values())
     report["wall_seconds"] = round(time.time() - t_start, 3)
-    report["points_per_sec"] = round(total_points / max(report["wall_seconds"], 1e-9), 1)
+    report["points_per_sec"] = round(report["total_points"] / max(report["wall_seconds"], 1e-9), 1)
     return report
+
+
+def _tier_states(
+    x: DataFrame, tiers: Sequence[str], widths: Sequence[int], strategy: str,
+) -> DataFrame:
+    """Every tier's state in one lazy plan, told apart by a ``tier``
+    column; with ``cascade`` each tier is merged from the previous one."""
+    keys = [*GROUP_VARS, "p"]
+    states, prev = [], None
+    for tier, width, prev_width in zip(tiers, widths, [None, *widths]):
+        if prev is None or strategy == "direct":
+            st = rollup_from_raw(x, width, VALUE_VARS, keys)
+        else:
+            st = rollup_cascade(prev, prev_width, width, VALUE_VARS, keys)
+        states.append(st.withColumn("tier", F.lit(tier)))
+        prev = st
+    return reduce(DataFrame.unionByName, states)
 
 
 def finalize_tier(

@@ -3,28 +3,38 @@
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics". The unit of resume is a *url-hash bucket*: every table in the
 pipeline carries ``p = pmod(xxhash64(url), n_buckets)`` and is written
-``partitionBy("p")``. For each bucket we record a LINEAGE row:
+``partitionBy(..., "p")``. For each bucket we record a LINEAGE row:
 
-    p, input_fingerprint, input_rows, output_rows, out_checksum, tier
+    tier, p, input_fingerprint, input_rows, output_rows, output_checksum
 
 The input fingerprint is an order-insensitive pure-JVM aggregate: the SUM
 of per-row xxhash64 reduced mod the largest 63-bit prime (DECIMAL
 accumulation — ANSI-safe, no overflow, no Python). SUM, not bit_xor: XOR
 cancels any pairwise-duplicated change (two identical new rows would
 leave the fingerprint untouched), while a modular sum is duplicate-
-sensitive. plan_resume additionally compares the recorded row count as a
-second independent witness. On re-run, buckets whose (fingerprint, rows)
-match the manifest are SKIPPED; only changed/new buckets recompute, and
-dynamic partition overwrite rewrites exactly those directories. This replaces Structured
-Streaming checkpoints for the batch-incremental tier cascade (SURVEY §2.3:
-watermarks are out of scope; resume-from-checkpoint replaces them).
+sensitive. The row count is compared as a second independent witness.
+
+A run plans its resume from ONE driver collect: :func:`resume_plan`
+full-outer-joins the fingerprints with the manifest and returns the
+buckets to recompute, the ones to skip, the ones whose input vanished,
+and the manifest to write afterwards (an Arrow table — written without a
+Python worker). The recomputed buckets are then written in ONE
+partitioned write (``jobs/rollup.py`` writes every tier at once,
+``partitionBy("tier", "p")``); dynamic partition overwrite, set per
+write, rewrites exactly those directories and leaves every other one —
+other buckets, other tiers, sibling directories — in place. This replaces
+Structured Streaming checkpoints for the batch-incremental tier cascade
+(SURVEY §2.3: watermarks are out of scope; resume-from-checkpoint
+replaces them).
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +42,11 @@ MANIFEST_SCHEMA = (
     "tier string, p long, input_fingerprint long, input_rows long, "
     "output_rows long, output_checksum long"
 )
+#: MANIFEST_SCHEMA in Arrow, for the driver-side manifest snapshot
+_MANIFEST_ARROW = pa.schema([("tier", pa.string())] + [
+    (c, pa.int64())
+    for c in ("p", "input_fingerprint", "input_rows", "output_rows", "output_checksum")
+])
 
 
 def with_bucket(df: DataFrame, key_col: str, n_buckets: int, out: str = "p") -> DataFrame:
@@ -55,21 +70,69 @@ def fingerprint_partitions(df: DataFrame, part_col: str = "p") -> DataFrame:
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    mpath = os.path.join(path, "_lineage")
+    """The ``_lineage`` manifest under ``path``, or an empty one. Read with
+    the known schema, so no schema-inference job runs."""
     try:
-        return spark.read.parquet(mpath)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(os.path.join(path, "_lineage"))
     except Exception:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
 def write_manifest(manifest: DataFrame, path: str) -> None:
-    # Manifest rows are per-bucket metadata (small by construction). The
-    # merged plan may lazily READ the _lineage dir being overwritten, so
-    # materialize on the driver first (read-then-overwrite-same-path).
-    spark = manifest.sparkSession
-    rows = manifest.collect()
-    snap = spark.createDataFrame(rows, manifest.schema) if rows else spark.createDataFrame([], MANIFEST_SCHEMA)
-    snap.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "_lineage"))
+    """Overwrite the ``_lineage`` manifest. Manifest rows are per-bucket
+    metadata (small by construction), and the plan may lazily READ the
+    directory being overwritten, so it is snapshotted on the driver first
+    — through Arrow, which needs no Python worker."""
+    write_manifest_arrow(manifest.sparkSession, manifest.toArrow(), path)
+
+
+def write_manifest_arrow(spark: SparkSession, table: pa.Table, path: str) -> None:
+    """Overwrite the ``_lineage`` manifest with a driver-side Arrow table."""
+    (spark.createDataFrame(table).coalesce(1)
+     .write.mode("overwrite").parquet(os.path.join(path, "_lineage")))
+
+
+class ResumePlan(NamedTuple):
+    """Driver-side outcome of :func:`resume_plan`."""
+
+    todo: list[int]      #: buckets that are new or whose input changed
+    skipped: list[int]   #: buckets whose (fingerprint, rows) match the manifest
+    vanished: list[int]  #: manifest buckets with no input rows left
+    manifest: pa.Table   #: the manifest to write once the todo buckets are done
+
+
+def resume_plan(input_fps: DataFrame, manifest: DataFrame, tier: str) -> ResumePlan:
+    """Compare bucket (fingerprint, row count) with the manifest in ONE
+    collect of their full outer join.
+
+    Both recorded witnesses must match for a skip — the row count catches
+    any residual hash-collision class the modular sum might admit. A
+    manifest bucket with no fingerprint row has vanished: a bucket with
+    zero input emits nothing, so its written partitions and manifest
+    entries are stale and must be cleared. The new manifest records every
+    fingerprinted bucket under ``tier``, keeps the other tiers' entries,
+    and drops every entry of a vanished bucket. Bucket counts are small
+    (≤ thousands) by construction, so the collect is a metadata
+    operation, not a data read."""
+    cols = _MANIFEST_ARROW.names
+    old = manifest.select(*(F.col(c).alias(f"m_{c}") for c in cols))
+    j = input_fps.join(
+        old, (input_fps["p"] == old["m_p"]) & (old["m_tier"] == tier), "full_outer")
+    todo, skipped, vanished, kept, new = [], [], [], [], []
+    for r in j.select("p", "fingerprint", "rows", *old.columns).collect():
+        if r["p"] is None:  # a manifest entry no fingerprint matched
+            if r["m_tier"] == tier:
+                vanished.append(r["m_p"])
+            else:
+                kept.append(r[3:])
+            continue
+        same = r["m_input_fingerprint"] == r["fingerprint"] and r["m_input_rows"] == r["rows"]
+        (skipped if same else todo).append(r["p"])
+        new.append((tier, r["p"], r["fingerprint"], r["rows"], None, None))
+    gone = set(vanished)
+    rows = sorted(new + [k for k in kept if k[1] not in gone], key=lambda k: (k[0], k[1]))
+    table = pa.Table.from_pylist([dict(zip(cols, k)) for k in rows], schema=_MANIFEST_ARROW)
+    return ResumePlan(sorted(todo), sorted(skipped), sorted(vanished), table)
 
 
 def plan_resume(
@@ -77,35 +140,9 @@ def plan_resume(
     manifest: DataFrame,
     tier: str,
 ) -> tuple[list[int], list[int]]:
-    """Compare bucket (fingerprint, row count) with the manifest.
-
-    Both recorded witnesses must match for a skip — the row count catches
-    any residual hash-collision class the modular sum might admit.
-    Returns (todo_buckets, skipped_buckets) — driver-side lists; bucket
-    counts are small (≤ thousands) by construction, so this collect is a
-    metadata operation, not a data read."""
-    old = manifest.filter(F.col("tier") == tier).select(
-        F.col("p").alias("mp"),
-        F.col("input_fingerprint").alias("mfp"),
-        F.col("input_rows").alias("mrows"),
-    )
-    j = input_fps.join(old, input_fps["p"] == old["mp"], "left")
-    rows = j.select("p", "fingerprint", "rows", "mfp", "mrows").collect()
-    same = lambda r: r["mfp"] == r["fingerprint"] and r["mrows"] == r["rows"]  # noqa: E731
-    todo = sorted(int(r["p"]) for r in rows if r["mfp"] is None or not same(r))
-    skipped = sorted(int(r["p"]) for r in rows if r["mfp"] is not None and same(r))
-    return todo, skipped
-
-
-def vanished_buckets(input_fps: DataFrame, manifest: DataFrame, tier: str) -> list[int]:
-    """Buckets recorded in the manifest whose input rows have vanished
-    entirely (no fingerprint row this run). Their written tier partitions
-    and manifest entries are stale and must be cleared — a bucket with
-    zero input emits nothing, so without this anti-join it would silently
-    keep serving old output."""
-    old = manifest.filter(F.col("tier") == tier).select("p")
-    gone = old.join(input_fps.select("p"), "p", "left_anti")
-    return sorted(int(r["p"]) for r in gone.collect())
+    """``(todo_buckets, skipped_buckets)`` of :func:`resume_plan`."""
+    plan = resume_plan(input_fps, manifest, tier)
+    return plan.todo, plan.skipped
 
 
 def delete_partition_dirs(spark: SparkSession, root: str, subdirs: Sequence[str]) -> None:
@@ -130,11 +167,8 @@ def write_partitioned(
 ) -> None:
     """Partitioned parquet write; with ``dynamic``, only partitions present
     in ``df`` are overwritten (exact-resume rewrite granularity)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    w = df.write.partitionBy(*part_cols).mode("overwrite")
     if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.partitionBy(*part_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # per write, not on the session: concurrent writers keep their mode
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.parquet(path)
